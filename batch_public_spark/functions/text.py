@@ -59,6 +59,11 @@ TEXT_FIELDS: tuple[str, ...] = (
 DEDUP_URL_KEYS: tuple[str, ...] = ("url", "link", "source_url", "guid")
 DEDUP_ID_KEYS: tuple[str, ...] = ("id", "pk", "record_id", "article_id")
 
+# Every character ``str.isspace()`` matches (all lie below U+3001) — the set
+# ``str.strip()`` removes: tabs, newlines, NBSP, ... Spark's ``trim`` strips
+# only U+0020.
+WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+
 _NUMERIC_TYPES = (
     T.ByteType,
     T.ShortType,
@@ -80,10 +85,17 @@ def _lower_map(df: DataFrame) -> dict[str, str]:
     return m
 
 
+def strip_ws(col: Column) -> Column:
+    """``str.strip()`` as a column: drop leading and trailing
+    :data:`WHITESPACE`."""
+    return F.btrim(col, F.lit(WHITESPACE))
+
+
 def extract_text(df: DataFrame, fields: tuple[str, ...] = TEXT_FIELDS) -> Column:
     """First non-empty text candidate in priority order (reference F5).
 
-    Per-candidate behavior: strings trimmed, empty-after-trim skipped;
+    Per-candidate behavior: strings stripped (:func:`strip_ws`), empty
+    after stripping skipped;
     numerics (incl. Decimal) stringified; arrays/maps/structs serialized to
     compact JSON. NULL when nothing usable.
     """
@@ -96,7 +108,7 @@ def extract_text(df: DataFrame, fields: tuple[str, ...] = TEXT_FIELDS) -> Column
         dt = df.schema[name].dataType
         col = F.col(name)
         if isinstance(dt, T.StringType):
-            parts.append(F.nullif(F.trim(col), F.lit("")))
+            parts.append(F.nullif(strip_ws(col), F.lit("")))
         elif isinstance(dt, _NUMERIC_TYPES):
             parts.append(col.cast("string"))
         elif isinstance(dt, T.BooleanType):
@@ -118,7 +130,7 @@ def usable_text(df: DataFrame, fields: tuple[str, ...] = TEXT_FIELDS) -> Column:
 
 
 def dedup_key(df: DataFrame) -> Column:
-    """Priority dedup key (reference D1): ``url:<lower(trim(url-ish))>``
+    """Priority dedup key (reference D1): ``url:<lower(strip(url-ish))>``
     else ``id:<str(pk-ish)>`` else NULL.
 
     The engine lowercases column names at ingest, subsuming the reference's
@@ -126,7 +138,7 @@ def dedup_key(df: DataFrame) -> Column:
     """
     lower = _lower_map(df)
     url_parts = [
-        F.nullif(F.lower(F.trim(F.col(lower[k]))), F.lit(""))
+        F.nullif(F.lower(strip_ws(F.col(lower[k]))), F.lit(""))
         for k in DEDUP_URL_KEYS
         if k in lower
     ]

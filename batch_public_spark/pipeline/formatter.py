@@ -13,10 +13,11 @@ reference numbering for compat when needed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from batch_public_spark.functions.text import strip_ws
 from batch_public_spark.pipeline.models import resolve
 
 # Reference jsonl_formatter.py:17-21, verbatim prompt constant (data, not code).
@@ -55,16 +56,14 @@ def build_requests(
     ``custom_id`` = ``row_<pk>`` (≤64 chars per the OpenAI constraint noted
     at jsonl_formatter.py:169) — key-based, shuffle-free, join-ready.
     """
-    usable = F.length(F.trim(F.col(text_col))) > 0
+    text = strip_ws(F.col(text_col))
     return (
-        df.filter(F.col(text_col).isNotNull() & usable)
+        df.filter(F.length(text) > 0)
         .select(
             F.concat(F.lit("row_"), F.col(id_col).cast("string")).substr(1, 64).alias("custom_id"),
             F.lit("POST").alias("method"),
             F.lit(ENDPOINT).alias("url"),
-            request_struct(
-                F.trim(F.col(text_col)), model_key=model_key, user_col=F.col(id_col)
-            ).alias("body"),
+            request_struct(text, model_key=model_key, user_col=F.col(id_col)).alias("body"),
         )
     )
 
@@ -83,13 +82,17 @@ def positional_custom_ids(requests: DataFrame, order_col: str) -> DataFrame:
 def write_jsonl(requests: DataFrame, path: str, *, max_records_per_file: int | None = None) -> int:
     """JSONL sink (reference K1): one compact JSON per line, never
     overwrite (mode=error mirrors the reference's suffix-counter refusal to
-    clobber, jsonl_formatter.py:61-73). Returns written count.
+    clobber, jsonl_formatter.py:61-73). Returns the written count, observed
+    by the write itself rather than counted by a second job.
 
     ``maxRecordsPerFile`` maps to the OpenAI per-file batch limits at scale
     (SURVEY §4 design note)."""
-    jsonl = requests.select(F.to_json(F.struct(*requests.columns)).alias("value"))
+    written = Observation()
+    jsonl = requests.observe(written, F.count(F.lit(1)).alias("n")).select(
+        F.to_json(F.struct(*requests.columns)).alias("value")
+    )
     writer = jsonl.write.mode("error")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.text(path)
-    return requests.count()
+    return written.get["n"]

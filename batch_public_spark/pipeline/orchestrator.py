@@ -6,8 +6,13 @@ agent_api.py:12-35).
   scan → temporal look-back filter (F1) → watermark incremental filter (F3)
   → text extraction (F5) + usability predicate (F4) → keyed first-wins
   dedup (D1) → request build (P1/P2) → JSONL sink (K1) [--test stops here,
-  X7] → watermark persist → LLM stage (X1, stub by default) → parse (EP3)
-  → ledger updates (K4) → output↔input join (J1).
+  X7] → watermark persist → LLM stage over the JSONL (X1, stub by default)
+  → parse (EP3) → ledger updates (K4) → output↔input join (J1).
+
+The JSONL write is the run's one action over the input: it observes the
+input and request counts and the new watermark as it writes, and every
+later stage (LLM, provider upload) reads the JSONL back, as the reference's
+batch consumes its file. Nothing is cached.
 
 Differences from the reference, by design (SURVEY §4):
 - watermark persist order is configurable (`persist_before_submit=True`
@@ -20,12 +25,13 @@ Differences from the reference, by design (SURVEY §4):
 
 from __future__ import annotations
 
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from batch_public_spark.functions.text import dedup_key, extract_text
@@ -51,6 +57,10 @@ NO_TS_FILTER: set[str] = set()
 
 @dataclass
 class RunResult:
+    """``n_input``: rows after dedup; ``n_requests``: JSONL lines written
+    (both observed by the write); ``requests``: the JSONL read back;
+    ``parsed``: the parsed LLM replies (None unless the LLM ran)."""
+
     batch_id: Optional[str]
     table: str
     n_input: int
@@ -125,27 +135,28 @@ class Orchestrator:
         # F5 text extraction + F4 usability, then D1 first-wins dedup.
         work = work.withColumn("_text", extract_text(df)).filter(F.col("_text").isNotNull())
         work = first_wins(work, dedup_key(work), order)
-        work = work.cache()
-
-        n_input = work.count()
-        if n_input == 0:
-            # Early-exit parity (reference main.py:221-223).
-            return RunResult(None, table_name, 0, 0, skipped_reason="no new rows")
-
+        seen = Observation()
+        work = work.observe(seen, F.count(F.lit(1)).alias("n"), F.max("_event_ts").alias("wm"))
         requests = build_requests(work, text_col="_text", id_col=id_col, model_key=model_key)
 
         batch_id = f"batch_{uuid.uuid4().hex[:12]}"
         jsonl_path = f"{self.output_dir}/{'jsonl_test' if test_only else 'jsonl'}/{table_name}_{batch_id}"
         n_requests = write_jsonl(requests, jsonl_path)
-
+        n_input, new_wm = seen.get["n"], seen.get["wm"]  # A1: max over post-dedup rows
+        if n_input == 0:
+            # Early-exit parity (reference main.py:221-223).
+            shutil.rmtree(jsonl_path)
+            return RunResult(None, table_name, 0, 0, skipped_reason="no new rows")
+        requests = df.sparkSession.read.schema(requests.schema).json(jsonl_path)
+        result = RunResult(
+            None, table_name, n_input, n_requests, requests=requests, jsonl_path=jsonl_path
+        )
         if test_only:
             # X7 dry-run: JSONL written to the quarantined dir, stop before
             # any external call (reference main.py:238-254).
-            return RunResult(
-                None, table_name, n_input, n_requests, requests=requests, jsonl_path=jsonl_path
-            )
+            return result
+        result.batch_id = batch_id
 
-        new_wm = work.agg(F.max("_event_ts").alias("m")).collect()[0]["m"]  # A1
         # `is not None`: a legitimate watermark of 0 (epoch start) must still
         # advance — truthiness would silently skip it.
         advance_wm = table_name not in self.no_ts_filter and new_wm is not None
@@ -189,10 +200,7 @@ class Orchestrator:
                         provider[0]["input_file_id"] if len(provider) == 1 else None
                     ),
                 )
-            return RunResult(
-                batch_id, table_name, n_input, n_requests,
-                requests=requests, jsonl_path=jsonl_path,
-            )
+            return result
 
         # X1 blocking path. With a provider client this is the reference's
         # wait=True orchestrate mode: real submit → poll to terminal →
@@ -206,26 +214,17 @@ class Orchestrator:
             entry = self.wait(batch_id)
             final = entry.get("final_status")
             if final != "completed":
-                return RunResult(
-                    batch_id, table_name, n_input, n_requests,
-                    requests=requests, jsonl_path=jsonl_path,
-                    skipped_reason=f"provider batch {final}",
-                )
-            parsed = self.parsed_outputs(df.sparkSession, batch_id)
-            return RunResult(
-                batch_id, table_name, n_input, n_requests,
-                requests=requests, parsed=parsed, jsonl_path=jsonl_path,
-            )
+                result.skipped_reason = f"provider batch {final}"
+            else:
+                result.parsed = self.parsed_outputs(df.sparkSession, batch_id)
+            return result
 
-        raw = respond(requests, self.transport_factory)
-        parsed = parse_batch_output(raw)
-
+        # The read-back has one partition per small JSONL file; spread the
+        # calls over every core instead.
+        spread = requests.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        result.parsed = parse_batch_output(respond(spread, self.transport_factory))
         self._close(batch_id)
-
-        return RunResult(
-            batch_id, table_name, n_input, n_requests,
-            requests=requests, parsed=parsed, jsonl_path=jsonl_path,
-        )
+        return result
 
     def run_tables(self, sources: dict[str, DataFrame], **kwargs) -> dict[str, RunResult]:
         """X5: loop orchestrate() over N tables (reference main.py:658-702).

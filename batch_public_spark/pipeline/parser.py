@@ -73,28 +73,20 @@ def parse_batch_output(records: DataFrame) -> DataFrame:
 
     base = records.filter(ok).select(
         F.col("custom_id").alias("_source_custom_id"),
-        cleaned.alias("_cleaned"),
-        F.when(cleaned.startswith("["), arr).otherwise(F.lit(None).cast(ARR)).alias("_arr"),
+        F.when(cleaned.startswith("["), arr).alias("_arr"),
         obj.alias("_obj"),
     )
-
-    scalars = base.filter(F.col("_arr").isNull()).select(
+    # One pass: a scalar reply explodes as a one-element list, index -1.
+    return base.select(
         "_source_custom_id",
-        F.lit(-1).cast("int").alias("_source_list_index"),
-        F.col("_obj").alias("parsed"),
-        F.map_contains_key(F.col("_obj"), "raw_content").alias("is_raw"),
+        F.col("_arr").isNull().alias("_scalar"),
+        F.posexplode(F.coalesce("_arr", F.array("_obj"))).alias("_pos", "parsed"),
+    ).select(
+        "_source_custom_id",
+        F.when(F.col("_scalar"), -1).otherwise(F.col("_pos")).cast("int").alias("_source_list_index"),
+        "parsed",
+        (F.col("_scalar") & F.map_contains_key("parsed", "raw_content")).alias("is_raw"),
     )
-    arrays = (
-        base.filter(F.col("_arr").isNotNull())
-        .select("_source_custom_id", F.posexplode("_arr").alias("_source_list_index", "parsed"))
-        .select(
-            "_source_custom_id",
-            F.col("_source_list_index").cast("int"),
-            "parsed",
-            F.lit(False).alias("is_raw"),
-        )
-    )
-    return scalars.unionByName(arrays)
 
 
 def join_outputs_to_inputs(parsed: DataFrame, requests: DataFrame) -> DataFrame:

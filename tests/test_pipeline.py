@@ -3,6 +3,7 @@ per FIXTURES.md §B, property checks per SURVEY §5)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -34,13 +35,16 @@ def source(spark):
         Row(id="1", url="http://x/A", timestamp=str(NOW - 100), summary="first copy"),
         Row(id="2", url=" HTTP://X/a ", timestamp=str(NOW - 50), summary="second copy"),
         # fresh, id-keyed (no url)
-        Row(id="3", url=None, timestamp=f"{NOW - 200}", summary="id keyed"),
+        Row(id="3", url=None, timestamp=f"{NOW - 200}", summary="\tid keyed\n"),
         # too old (outside 12 h look-back)
         Row(id="4", url="http://x/old", timestamp=str(NOW - 13 * 3600), summary="stale"),
         # missing ts → dropped (table not in NO_TS_FILTER)
         Row(id="5", url="http://x/nots", timestamp=None, summary="no ts"),
         # fresh but no usable text → dropped
         Row(id="6", url="http://x/notext", timestamp=str(NOW - 10), summary="   "),
+        # whitespace beyond U+0020 (str.strip() semantics) is no text either
+        Row(id="7", url="http://x/tabs", timestamp=str(NOW - 20), summary="\t\n"),
+        Row(id="8", url="http://x/nbsp", timestamp=str(NOW - 30), summary="\u00a0"),
     ]
     return spark.createDataFrame(rows)
 
@@ -57,7 +61,7 @@ def orch(tmp_path):
 
 def test_run_batch_end_to_end(spark, source, orch):
     res = orch.run_batch(source, table_name="news", hours=12, now=NOW)
-    # rows 1+2 dedup to one (first-wins by id), row 3 kept, 4/5/6 dropped
+    # rows 1+2 dedup to one (first-wins by id), row 3 kept, 4-8 dropped
     assert res.n_input == 2
     assert res.n_requests == 2
     reqs = {r["custom_id"]: r for r in res.requests.collect()}
@@ -67,6 +71,7 @@ def test_run_batch_end_to_end(spark, source, orch):
     assert body["messages"][0]["role"] == "system"
     assert body["messages"][1]["content"] == "first copy"
     assert body["user"] == "1"
+    assert reqs["row_3"]["body"]["messages"][1]["content"] == "id keyed"
     # parse stage produced provenance-joined rows
     parsed = res.parsed.collect()
     assert {p["_source_custom_id"] for p in parsed} == {"row_1", "row_3"}
@@ -81,21 +86,29 @@ def test_run_batch_end_to_end(spark, source, orch):
     assert entry["record_count"] == 2
 
 
-def test_watermark_convergence_over_reruns(spark, source, orch):
+def test_watermark_convergence_over_reruns(spark, source, orch, tmp_path):
     """Property (SURVEY §5): repeated runs over the same input converge to
     empty. Faithful wrinkle: the dedup seen-set is per-invocation (reference
     dynamo_fetcher.py:200-203), so the newer duplicate (id=2, NOW-50) that
     lost first-wins in run 1 is re-considered in run 2 — it sits above the
-    run-1 watermark (NOW-100) and goes out alone. Run 3 is empty."""
+    run-1 watermark (NOW-100) and goes out alone. Run 3 is empty, and no
+    run leaves cached data, an empty JSONL directory or a ledger entry
+    behind for nothing."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     first = orch.run_batch(source, table_name="news", hours=12, now=NOW)
     assert first.n_requests == 2
     second = orch.run_batch(source, table_name="news", hours=12, now=NOW)
     assert second.n_requests == 1
     assert [r["custom_id"] for r in second.requests.collect()] == ["row_2"]
     assert orch.watermarks.last("news") == NOW - 50
+    jsonl_dirs = glob.glob(str(tmp_path / "out" / "jsonl" / "news_*"))
+    ledger = orch.ledger.all()
     third = orch.run_batch(source, table_name="news", hours=12, now=NOW)
     assert third.skipped_reason == "no new rows"
     assert orch.watermarks.last("news") == NOW - 50
+    assert glob.glob(str(tmp_path / "out" / "jsonl" / "news_*")) == jsonl_dirs
+    assert orch.ledger.all() == ledger
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_dry_run_writes_jsonl_only(spark, source, orch, tmp_path):
@@ -119,6 +132,27 @@ def test_dry_run_writes_jsonl_only(spark, source, orch, tmp_path):
     # no OpenAI call, no ledger entry, no watermark movement (X7)
     assert orch.ledger.all() == {}
     assert orch.watermarks.last("news") is None
+
+
+def test_llm_called_once_per_request(spark, source, tmp_path):
+    """The inline LLM stage runs each request through the transport once:
+    parsing its replies must not re-run it."""
+    calls = spark.sparkContext.accumulator(0)
+
+    class CountingTransport(StubTransport):
+        def complete(self, custom_id, body):
+            calls.add(1)
+            return super().complete(custom_id, body)
+
+    orch = Orchestrator(
+        watermarks=WatermarkStore(str(tmp_path / "wm.json")),
+        ledger=JobLedger(str(tmp_path / "ledger.json")),
+        transport_factory=CountingTransport,
+        output_dir=str(tmp_path / "out"),
+    )
+    res = orch.run_batch(source, table_name="news", hours=12, now=NOW)
+    res.parsed.collect()
+    assert calls.value == res.n_requests == 2
 
 
 def test_hours_zero_short_circuit(spark, source, orch):
@@ -165,22 +199,59 @@ def test_join_outputs_to_inputs(spark):
 
 def test_read_batch_outputs_tolerates_malformed(spark, tmp_path):
     p = tmp_path / "out.jsonl"
-    good = {
-        "id": "x",
-        "custom_id": "row_1",
-        "response": {
-            "status_code": 200,
-            "body": {"choices": [{"message": {"role": "assistant", "content": '{"a": 1}'}}]},
-        },
-    }
+
+    def reply(custom_id, content):
+        return {
+            "id": "x",
+            "custom_id": custom_id,
+            "response": {
+                "status_code": 200,
+                "body": {"choices": [{"message": {"role": "assistant", "content": content}}]},
+            },
+        }
+
     bad_status = {"id": "y", "custom_id": "row_2", "response": {"status_code": 500, "body": None}}
-    p.write_text(json.dumps(good) + "\n" + "NOT JSON AT ALL\n" + json.dumps(bad_status) + "\n")
+    # Reply edge cases: clean, fenced, trailing comma, array, empty array,
+    # array of non-objects, broken array, leading space, fenced array,
+    # trailing-comma array, empty string.
+    edges = [
+        '{"a": 1}',
+        '```json\n{"a": 2}\n```',
+        '{"a": 3,}',
+        '[{"a": 4}, {"a": 5}]',
+        "[]",
+        "[1,2]",
+        "[not json",
+        ' {"a": 6}',
+        '```json\n[{"a": 7}]\n```',
+        '[{"a": 8},]',
+        "",
+    ]
+    lines = [json.dumps(reply("row_1", '{"a": 1}')), "NOT JSON AT ALL", json.dumps(bad_status)]
+    lines += [json.dumps(reply(f"row_{10 + i}", c)) for i, c in enumerate(edges)]
+    p.write_text("\n".join(lines) + "\n")
     df = read_batch_outputs(spark, str(p))
     parsed = parse_batch_output(df)
-    rows = parsed.collect()
-    # malformed line quarantined, 500 filtered (F6), good row parsed
-    assert len(rows) == 1
-    assert rows[0]["parsed"]["a"] == "1"
+    rows = sorted(
+        (r["_source_custom_id"], r["_source_list_index"], r["parsed"], r["is_raw"])
+        for r in parsed.collect()
+    )
+    # malformed line quarantined, 500 filtered (F6), `[]` yields no row,
+    # anything unparseable is kept verbatim as raw_content
+    assert rows == [
+        ("row_1", -1, {"a": "1"}, False),
+        ("row_10", -1, {"a": "1"}, False),
+        ("row_11", -1, {"a": "2"}, False),
+        ("row_12", -1, {"a": "3"}, False),
+        ("row_13", 0, {"a": "4"}, False),
+        ("row_13", 1, {"a": "5"}, False),
+        ("row_15", -1, {"raw_content": "[1,2]"}, True),
+        ("row_16", -1, {"raw_content": "[not json"}, True),
+        ("row_17", -1, {"a": "6"}, False),
+        ("row_18", 0, {"a": "7"}, False),
+        ("row_19", 0, {"a": "8"}, False),
+        ("row_20", -1, {"raw_content": ""}, True),
+    ]
 
 
 def test_async_commit_after_success_advances_watermark_on_resume(spark, source, tmp_path):
